@@ -254,3 +254,101 @@ def test_save_table_versioned_roundtrip(spark, archive):
     assert archive.table("bpe_model").agg(
         F.sum("pair_count")
     ).first()[0] == 17
+
+
+# -- table handles: one resolution per committed version -------------------
+
+
+def _video_rows(spark, archive, ids):
+    return spark.createDataFrame(
+        [(v, f"T-{v}", None, None, None, 60, 1, "Chan", None, None, None, None) for v in ids],
+        schema=archive.table("videos").schema,
+    )
+
+
+def _ids(df):
+    return sorted(r.video_id for r in df.collect())
+
+
+def _jobs_run_by(spark, fn, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_handle_reused_without_spark_jobs(spark, archive):
+    archive.upsert_videos(_video_rows(spark, archive, ["aaaaaaaaaaa"]))
+    first, cold_jobs = _jobs_run_by(spark, lambda: archive.table("videos"), "sg_tbl_cold")
+    assert cold_jobs  # resolving a version lists it and infers its schema
+    second, warm_jobs = _jobs_run_by(spark, lambda: archive.table("videos"), "sg_tbl_warm")
+    assert second is first
+    assert warm_jobs == []
+    for t in ("playlists", "transcripts", "playlist_videos"):
+        archive.table(t)
+    # with every handle warm, building the stats plan runs no job either
+    _, build_jobs = _jobs_run_by(spark, archive.stats, "sg_stats_build")
+    assert build_jobs == []
+
+
+def test_table_handle_after_rollback_then_commit_reuses_version(spark, archive):
+    archive.upsert_videos(_video_rows(spark, archive, ["aaaaaaaaaaa"]))
+    archive.upsert_videos(_video_rows(spark, archive, ["bbbbbbbbbbb"]))
+    v = archive._version_of("videos")
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "bbbbbbbbbbb"]
+    only_c = _video_rows(spark, archive, ["ccccccccccc"])
+    archive.rollback("videos")
+    archive._commit("videos", only_c)
+    assert archive._version_of("videos") == v  # same number, new contents
+    assert _ids(archive.table("videos")) == ["ccccccccccc"]
+    archive.rollback("videos")
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa"]
+    archive.upsert_videos(_video_rows(spark, archive, ["ccccccccccc"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "ccccccccccc"]
+
+
+def test_table_handle_sees_commits_of_another_instance(spark, archive):
+    archive.upsert_videos(_video_rows(spark, archive, ["aaaaaaaaaaa"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa"]
+    assert archive.sql("SELECT count(*) AS n FROM videos").first().n == 1
+    other = Archive(spark, archive.root)
+    other.upsert_videos(_video_rows(spark, other, ["bbbbbbbbbbb"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "bbbbbbbbbbb"]
+    assert archive.sql("SELECT count(*) AS n FROM videos").first().n == 2
+    # a rollback + commit by the other instance reuses the version number
+    other.rollback("videos")
+    other.upsert_videos(_video_rows(spark, other, ["ccccccccccc"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "ccccccccccc"]
+    assert archive.sql("SELECT count(*) AS n FROM videos").first().n == 2
+
+
+def test_table_handle_never_serves_orphaned_next_version(spark, archive):
+    archive.upsert_videos(_video_rows(spark, archive, ["aaaaaaaaaaa"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa"]
+    # a crash after writing the next version dir, before the pointer flip
+    nxt = archive._version_of("videos") + 1
+    _video_rows(spark, archive, ["zzzzzzzzzzz"]).write.mode("overwrite").parquet(
+        archive._version_path("videos", nxt)
+    )
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa"]
+    assert _ids(Archive(spark, archive.root).table("videos")) == ["aaaaaaaaaaa"]
+    archive.upsert_videos(_video_rows(spark, archive, ["bbbbbbbbbbb"]))
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "bbbbbbbbbbb"]
+
+
+def test_table_handle_survives_gc_of_its_version(spark, archive):
+    import os
+
+    archive.upsert_videos(_video_rows(spark, archive, ["aaaaaaaaaaa"]))
+    old = archive._path("videos")
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa"]  # handle on `old`
+    other = Archive(spark, archive.root)
+    other.upsert_videos(_video_rows(spark, other, ["bbbbbbbbbbb"]))
+    other.upsert_videos(_video_rows(spark, other, ["ccccccccccc"]))
+    assert not os.path.exists(old)  # garbage-collected two commits later
+    assert _ids(archive.table("videos")) == ["aaaaaaaaaaa", "bbbbbbbbbbb", "ccccccccccc"]
+    assert archive.stats().first().total_videos == 3

@@ -88,3 +88,10 @@ def test_search_transcripts_snippet_highlight(spark, transcripts, videos):
     assert "**spark**" not in rows[0].snippet_highlighted  # exact-case only
     rows2 = search_transcripts(transcripts, videos, "spark").collect()
     assert "**spark**" in rows2[0].snippet_highlighted
+
+
+def test_summary_stats_without_edges(spark, playlists, videos, transcripts, playlist_videos):
+    df = summary_stats(playlists, videos, transcripts, playlist_videos.limit(0))
+    assert dict(df.dtypes)["cross_linked_videos"] == "bigint"
+    r = df.collect()[0]
+    assert r.cross_linked_videos == 0 and r.total_videos == 4

@@ -15,6 +15,17 @@ is retained until the NEXT commit, giving one-step ``rollback`` — the
 Spark analog of the reference's per-file transaction + conn.rollback
 (ref add_transcripts.py:199-204, main_scraper.py:169-174). On a real
 cluster the same call sites take a Delta/Iceberg commit instead.
+
+Read path: each committed version of a table is resolved once. ``table``
+keeps one DataFrame handle per table, built by ``spark.read.parquet`` (a
+directory listing plus a schema-inference job) and keyed on the version
+number AND the pointer file's identity (inode, mtime), both taken from the
+one descriptor the pointer is read through. Every ``os.replace`` installs
+a new pointer inode, so any flip — a commit or rollback through this or
+another ``Archive`` on the same root, including a rollback + commit
+that reuses a version number — changes the key and rebuilds the handle;
+``_commit`` and ``rollback`` also drop their table's entry at the flip.
+Between flips a read costs one pointer-file read and runs no Spark job.
 """
 
 from __future__ import annotations
@@ -41,6 +52,8 @@ class Archive:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # table name -> (pointer key, DataFrame handle of that version)
+        self._handles: dict[str, tuple[tuple, DataFrame]] = {}
 
     # -- storage ---------------------------------------------------------
 
@@ -50,14 +63,27 @@ class Archive:
     def _version_file(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.version")
 
-    def _version_of(self, table: str) -> int:
-        """Committed version number; 0 = the unversioned base directory
-        written by ``create`` (or a pre-versioning archive)."""
+    def _pointer(self, table: str) -> tuple[int, tuple]:
+        """The committed version number and a key that changes on every
+        pointer flip: ``(version, st_ino, st_mtime_ns)`` of the version
+        file, read and stat-ed through one descriptor. Version 0 = the
+        unversioned base directory written by ``create`` (or a
+        pre-versioning archive); a missing or unparsable pointer reads
+        as 0."""
         try:
             with open(self._version_file(table)) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return 0
+                st = os.fstat(f.fileno())
+                try:
+                    version = int(f.read().strip())
+                except ValueError:
+                    version = 0
+        except FileNotFoundError:
+            return 0, (0,)
+        return version, (version, st.st_ino, st.st_mtime_ns)
+
+    def _version_of(self, table: str) -> int:
+        """Committed version number (see ``_pointer``)."""
+        return self._pointer(table)[0]
 
     def _version_path(self, table: str, version: int) -> str:
         base = self._base(table)
@@ -66,6 +92,16 @@ class Archive:
     def _path(self, table: str) -> str:
         """Data directory of the CURRENT committed version."""
         return self._version_path(table, self._version_of(table))
+
+    def _flip(self, table: str, version: int) -> None:
+        """Atomically repoint ``table`` at ``version`` and drop its handle."""
+        ptr_tmp = self._version_file(table) + ".tmp"
+        with open(ptr_tmp, "w") as f:
+            f.write(str(version))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(ptr_tmp, self._version_file(table))
+        self._handles.pop(table, None)
 
     @classmethod
     def create(cls, spark: SparkSession, root: str) -> "Archive":
@@ -78,7 +114,19 @@ class Archive:
         return ar
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        """The CURRENT committed version of ``name``. The handle is built
+        once per version and returned again, as the same object, until the
+        pointer flips (a commit or rollback through any ``Archive`` on this
+        root); a repeat call reads only the pointer file and runs no Spark
+        job. Only the latest handle per table is kept, so a handle to a
+        garbage-collected version is never served."""
+        version, key = self._pointer(name)
+        hit = self._handles.get(name)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        df = self.spark.read.parquet(self._version_path(name, version))
+        self._handles[name] = (key, df)
+        return df
 
     def _commit(self, name: str, df: DataFrame) -> None:
         """Commit a whole-table rewrite via versioned-directory swap.
@@ -96,12 +144,7 @@ class Archive:
         cur = self._version_of(name)
         nxt = cur + 1
         df.write.mode("overwrite").parquet(self._version_path(name, nxt))
-        ptr_tmp = self._version_file(name) + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(nxt))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._version_file(name))
+        self._flip(name, nxt)
         self._gc(name, keep=(cur, nxt))
 
     def _gc(self, name: str, keep: tuple[int, ...]) -> None:
@@ -143,12 +186,7 @@ class Archive:
         prev = cur - 1
         if prev < 0 or not os.path.exists(self._version_path(name, prev)):
             raise ValueError(f"no previous version of {name!r} to roll back to")
-        ptr_tmp = self._version_file(name) + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(prev))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._version_file(name))
+        self._flip(name, prev)
 
     # -- ingestion (run_me.py / import_playlists.py / add_transcripts.py) -
 
@@ -314,9 +352,9 @@ class Archive:
         """Run ad-hoc Spark SQL with every archive table registered as a
         temp view (the reference's database is an open SQLite file any
         user can point sqlite3 at; this is that capability on the Spark
-        engine). Views re-resolve the CURRENT committed version at call
-        time, so a query never mixes table versions committed after it
-        was registered."""
+        engine). Views are re-registered from ``table`` at every call, so
+        each query reads the CURRENT committed versions, including commits
+        made through another ``Archive`` on the same root."""
         for name in schemas.SCHEMAS:
             self.table(name).createOrReplaceTempView(name)
         return self.spark.sql(query)

@@ -20,12 +20,16 @@ def summary_stats(
     playlist_videos: DataFrame,
 ) -> DataFrame:
     """A1/A4/A5 dashboard stats (ref display.py:145-193) as one single-row
-    DataFrame: table counts, cross-linked-video count, last-update max."""
+    DataFrame: table counts, cross-linked-video count, last-update max.
+    Fully lazy: every figure is a scalar aggregate cross-joined into the
+    row, so building the plan runs no Spark job. ``count`` of the filtered
+    groups (not ``sum``) keeps the cross-linked count a non-NULL long when
+    there are no edges."""
     cross = (
         playlist_videos.groupBy("video_id")
         .agg(F.countDistinct("playlist_id").alias("n"))
         .filter(F.col("n") > 1)
-        .count()
+        .agg(F.count("*").alias("cross_linked_videos"))
     )
     return (
         videos.agg(
@@ -34,7 +38,7 @@ def summary_stats(
         )
         .crossJoin(playlists.agg(F.count("*").alias("total_playlists")))
         .crossJoin(transcripts.agg(F.count("*").alias("total_transcripts")))
-        .withColumn("cross_linked_videos", F.lit(cross).cast("long"))
+        .crossJoin(cross)
     )
 
 
