@@ -31,7 +31,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, stalest
+    first: ordered by the latest round with a green row in the committed
+    ``CORRECTNESS_r*.json`` files (never-green first, ties in
+    registration order), so the driver's checked window needs nothing
+    bumped per round."""
     return registry.queries()
 
 

@@ -3,9 +3,12 @@ Exchange and zero Sort, and produce exactly the shuffled join's rows."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
+import youtube_scraper_db_spark
 from youtube_scraper_db_spark.operators.bucketing import (
     ensure_bucketed,
     write_bucketed,
@@ -67,3 +70,12 @@ def test_ensure_bucketed_idempotent(spark, bucketed_pair, tmp_path):
     )
     # table already existed: not rewritten, same row count
     assert df.count() == before
+
+
+def test_package_holds_no_absolute_checkout_path():
+    """The registry's bucketed tables go under whichever checkout runs
+    it, so no package source names a checkout's absolute path."""
+    pkg = Path(youtube_scraper_db_spark.__file__).parent
+    root = str(pkg.parent)
+    hits = [str(p) for p in pkg.rglob("*.py") if root in p.read_text(encoding="utf-8")]
+    assert not hits

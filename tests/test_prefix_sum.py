@@ -11,19 +11,29 @@ from pyspark.sql import functions as F
 from youtube_scraper_db_spark.operators.prefix_sum import distributed_cumsum
 
 
-def test_cumsum_matches_sequential(spark):
+def _check_against_sequential(spark, n_rows: int, parts: int) -> None:
     rng = random.Random(17)
-    rows = [(i, rng.randint(-5, 20)) for i in range(500)]
+    rows = [(i, rng.randint(-5, 20)) for i in range(n_rows)]
     rng.shuffle(rows)
     df = spark.createDataFrame(rows, "k long, v long")
     got = {
         r.k: r.cs
-        for r in distributed_cumsum(df, "k", "v", out_col="cs", num_partitions=7).collect()
+        for r in distributed_cumsum(df, "k", "v", out_col="cs", num_partitions=parts).collect()
     }
     acc = 0
     for k, v in sorted(rows):
         acc += v
         assert got[k] == acc, f"at k={k}"
+
+
+def test_cumsum_matches_sequential(spark):
+    _check_against_sequential(spark, 500, 7)
+
+
+def test_cumsum_matches_sequential_beyond_range_sample(spark):
+    """20k keys outnumber the range partitioner's sample, so bounds drawn
+    by two separate samples (the totals job, the final job) disagree."""
+    _check_against_sequential(spark, 20_000, 4)
 
 
 def test_cumsum_no_single_partition_exchange(spark):

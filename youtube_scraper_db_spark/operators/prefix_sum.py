@@ -6,18 +6,18 @@ A global ordered window collapses the whole dataset into ONE reducer
 the canonical scale-killer for running totals, interval sweeps, and
 cumulative distributions. The classic two-phase formulation instead:
 
-1. ``repartitionByRange`` on the sort key — a range shuffle, every
-   partition holds a contiguous key interval;
-2. running sum WITHIN each partition (``Window.partitionBy(pid)`` — no
-   cross-partition ordering, so no single-reducer exchange);
-3. per-partition totals (one row per partition — thousands of rows at
-   most) aggregated on the driver into exclusive prefix offsets, joined
-   back as a broadcast.
+1. cut the key domain into contiguous buckets at approximate quantiles
+   (one ``percentile_approx`` pass) and range-shuffle on the bucket id;
+2. running sum WITHIN each bucket (``Window.partitionBy(bucket)`` — no
+   cross-bucket ordering, so no single-reducer exchange);
+3. per-bucket totals (one row per bucket — thousands of rows at most)
+   aggregated on the driver into exclusive prefix offsets, joined back
+   as a broadcast.
 
-Total cost: one range shuffle of the data + one broadcast of
-#partitions rows, with every stage at full parallelism. The sweep-line
-queries built on this (interval stabbing counts, cumulative revenue)
-inherit the same scaling.
+Total cost: one quantile pass + one range shuffle of the data + one
+broadcast of #buckets rows, with every stage at full parallelism. The
+sweep-line queries built on this (interval stabbing counts, cumulative
+revenue) inherit the same scaling.
 """
 
 from __future__ import annotations
@@ -41,23 +41,28 @@ def distributed_cumsum(
     to one row per key first; with duplicate keys split across a range
     boundary the within-key ordering would be partition-dependent."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # Materialize the (pre-aggregated, one-row-per-key) input ONCE: three
-    # downstream jobs read it (range-boundary sampling, partition totals,
-    # final join) and would otherwise each recompute the full upstream
-    # lineage. localCheckpoint also pins the frame the range shuffle
-    # samples from, so partition ids are identical across those jobs.
+    # Materialize the (pre-aggregated, one-row-per-key) input ONCE: the
+    # quantile pass, the bucket totals and the final join all read it and
+    # would otherwise each recompute the full upstream lineage.
     # Storage is auto-released by the ContextCleaner when the RDD is GC'd.
     df = df.localCheckpoint(eager=True)
-    rp = df.repartitionByRange(n, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
+    # The bucket is a function of the key alone, computed from bounds
+    # fixed here. ``spark_partition_id()`` after a range shuffle on the key
+    # is not: the range partitioner samples with a seed taken from the RDD
+    # id, so the totals job and the final job can draw different bounds.
+    qs = [i / n for i in range(1, n)]
+    bounds = df.agg(F.percentile_approx(order_col, qs)).first()[0] if qs else None
+    bucket = sum(
+        ((F.col(order_col) > F.lit(b)).cast("int") for b in bounds or []), F.lit(0)
     )
+    rp = df.withColumn("_pid", bucket).repartitionByRange(n, "_pid")
     w = (
         Window.partitionBy("_pid")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = rp.withColumn("_local", F.sum(value_col).over(w))
-    # One row per partition: (pid, partition total). Driver-side exclusive
+    # One row per bucket: (pid, bucket total). Driver-side exclusive
     # prefix — O(#partitions), the only non-distributed step, by design.
     totals = sorted(
         (r["_pid"], r["_tot"])
